@@ -10,10 +10,39 @@ Scale notes (100 TB): `spark.read.parquet` on a directory tree gets
 file-listing parallelism, partition pruning and row-group skipping for
 free; the loaders below add nothing driver-side (no collect, no schema
 inference loops), so they scale with the FileSourceScanExec machinery.
+
+Checkpoint policy — the eagerness of each `localCheckpoint` role is
+decided here; call sites write the literal:
+
+- Multi-consumer inputs (edge lists, candidate pairs, rollups read by
+  several branches) and rank spines (plans/rank.py) are LAZY
+  (`eager=False`): the first consuming action materializes them, so an
+  eager checkpoint's separate driver-blocking job is pure overhead.
+  Racing stages may compute a partition twice; every such frame is
+  deterministic, so the duplicate is consistent. The dedup component
+  loop's per-round frames are lazy for the same reason: the round's
+  changed-count materializes them in the round's one job.
+- Staged frames — read back from files an op wrote to a scratch
+  directory — are EAGER, enforced by :func:`staged`: the frame must be
+  materialized before the directory is deleted.
+- Per-round frontiers of the graph traversals (BFS, SCC) are EAGER: a
+  round's frame is the build side of the next round's join (a
+  broadcast outside the keyed regime), and folding round compute into
+  a broadcast-build job risks the broadcast timeout.
+- The IVF partitioned layout's centroid frame (llm/similarity.py) is
+  EAGER on measured grounds: lazy folds the Lloyd chain into the
+  partitionBy(cid) write job and lost the A/B.
+- Audit ops outside the lazy A/Bs keep their eager checkpoints.
+
+The interleaved A/B numbers behind the lazy and IVF decisions are in
+OPTIMIZATION_r15.md §7 ("Lazy input checkpoints across the engine").
 """
 
 from __future__ import annotations
 
+import functools
+import tempfile
+from collections.abc import Callable
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,10 +123,6 @@ def load_table(
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Load the embeddings table under the engine's vector-ingest
     contract: rows whose `embedding` is NULL (the encoder row never
@@ -113,10 +138,26 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL-API paths)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+def staged(
+    build: Callable[[SparkSession, str, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Run an op that stages files in a scratch directory.
+
+    ``build(spark, sf_dir, tmp)`` writes under ``tmp`` and returns a
+    frame that may read those files back; the wrapper takes the
+    registry's ``(spark, sf_dir)``, checkpoints that frame eagerly while
+    ``tmp`` still exists, then deletes ``tmp`` — also when ``build``
+    raises. Stack it under ``@register``.
+    """
+
+    @functools.wraps(build)
+    def op(spark: SparkSession, sf_dir: str) -> DataFrame:
+        with tempfile.TemporaryDirectory(
+            prefix=f"s3u_{build.__name__}_", ignore_cleanup_errors=True
+        ) as tmp:
+            return build(spark, sf_dir, tmp).localCheckpoint(eager=True)
+
+    return op
 
 
 def spread_compute(df: DataFrame, *keys: str) -> DataFrame:

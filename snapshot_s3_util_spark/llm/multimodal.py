@@ -1436,11 +1436,11 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxPartitionBytes` packing small files per task. doc_id recovers
     from the file NAME JVM-side (regexp_extract), not from content.
     """
-    import shutil
     import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="s3u_binsrc_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="s3u_source_binary_files_", ignore_cleanup_errors=True
+    ) as tmp:
         docs = load_table(spark, sf_dir, "documents").select("doc_id")
         manifest = docs.mapInPandas(
             _bmp_export_stage(f"{tmp}/imgs"),
@@ -1486,8 +1486,6 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
         assert out.count() == n_files
         return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------- PNG (pure stdlib)

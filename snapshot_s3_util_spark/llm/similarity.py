@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from snapshot_s3_util_spark.io import load_embeddings, load_table
+from snapshot_s3_util_spark.io import load_embeddings, load_table, staged
 from snapshot_s3_util_spark.params import N_PROBES, SIM_TOPK
 from snapshot_s3_util_spark.registry import register
 
@@ -1434,15 +1434,6 @@ _IVFK_K = 32       # coarse clusters
 _IVFK_ROUNDS = 1   # Lloyd update rounds for the quantizer build
 _IVFK_NPROBE = 12  # clusters probed per query
 
-# Eagerness of the partitioned layout's centroid checkpoint. Lazy was
-# evaluated in the r15 lazy-checkpoint pass and REJECTED by the
-# interleaved A/B (lazy faster in only 2/7 pairs, median 2.405 ->
-# 2.452 s): unlike the pure-compute input frames, folding the Lloyd
-# chain into the partitionBy(cid) WRITE job serializes quantizer
-# compute behind writer setup, and the separate eager job keeps the
-# build/probe split instrument's phase accounting clean.
-_IVF_C1_CKPT_EAGER = True
-
 
 def _ivfk_quantizer_ctes() -> tuple[str, str, str]:
     """DuckDB CTE chain for the learned quantizer, unrolled to
@@ -1777,9 +1768,9 @@ def _ivfk_partitioned_layout(spark: SparkSession, sf_dir: str, out: str):
     # the whole Lloyd chain — two corpus-wide assignment passes per
     # invocation); the final assignment is rebuilt from the
     # checkpointed centroids so the corpus is scored exactly once.
-    # EAGER kept after a measured r15 lazy rejection — see
-    # _IVF_C1_CKPT_EAGER above.
-    c1 = c1.localCheckpoint(eager=_IVF_C1_CKPT_EAGER)
+    # EAGER on measured grounds — see the checkpoint policy in
+    # snapshot_s3_util_spark/io.py.
+    c1 = c1.localCheckpoint(eager=True)
     _assign(v, c1).write.mode("overwrite").partitionBy("cid").parquet(out)
     probe = v.filter(F.col("vec_id") == _PROBE_ID).select(
         F.col("e").alias("pe")
@@ -1797,7 +1788,10 @@ def _ivfk_partitioned_layout(spark: SparkSession, sf_dir: str, out: str):
 
 @register("llm_sim_ann_ivf_partitioned", oracle=_ivf_kmeans_oracle(),
           category="llm")
-def llm_sim_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
+@staged
+def llm_sim_ann_ivf_partitioned(
+    spark: SparkSession, sf_dir: str, out: str
+) -> DataFrame:
     """`llm_sim_ann_ivf_kmeans` with its 100 TB storage claim made
     REAL instead of docstring-only (r12 verdict ask #2): the cluster
     assignment is WRITTEN as a `cid` partition column, and the probe
@@ -1818,30 +1812,21 @@ def llm_sim_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-runnability; a deployment writes the layout once to shared
     storage.
     """
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="s3u_spark_ivfpart_")
-    try:
-        cids, back, probe = _ivfk_partitioned_layout(spark, sf_dir, out)
-        return (
-            back.crossJoin(F.broadcast(probe))
-            .withColumn("raw", _cos("e", "pe"))
-            .orderBy(F.col("raw").desc(), F.col("vec_id"))
-            .limit(SIM_TOPK)
-            .select(
-                "vec_id",
-                # partition-column read-back infers int; restore the
-                # assignment frame's long so the schema matches the
-                # in-memory twin and the shared oracle
-                F.col("cid").cast("long").alias("cluster_id"),
-                F.round("raw", 6).alias("cos_sim"),
-            )
-            # materialize before the scratch layout disappears
-            .localCheckpoint(eager=True)
+    cids, back, probe = _ivfk_partitioned_layout(spark, sf_dir, out)
+    return (
+        back.crossJoin(F.broadcast(probe))
+        .withColumn("raw", _cos("e", "pe"))
+        .orderBy(F.col("raw").desc(), F.col("vec_id"))
+        .limit(SIM_TOPK)
+        .select(
+            "vec_id",
+            # partition-column read-back infers int; restore the
+            # assignment frame's long so the schema matches the
+            # in-memory twin and the shared oracle
+            F.col("cid").cast("long").alias("cluster_id"),
+            F.round("raw", 6).alias("cos_sim"),
         )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    )
 
 
 def ivf_partitioned_split_timings(
@@ -1861,7 +1846,6 @@ def ivf_partitioned_split_timings(
     BENCH_DETAIL.json as ivf_partitioned_build_sec /
     ivf_partitioned_probe_sec next to the combined flagship wall.
     """
-    import shutil
     import statistics
     import tempfile
     import time
@@ -1869,8 +1853,10 @@ def ivf_partitioned_split_timings(
     builds: list[float] = []
     probes: list[float] = []
     for _ in range(runs):
-        out = tempfile.mkdtemp(prefix="s3u_spark_ivfpart_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="s3u_ivf_partitioned_split_timings_",
+            ignore_cleanup_errors=True,
+        ) as out:
             t0 = time.perf_counter()
             _cids, back, probe = _ivfk_partitioned_layout(
                 spark, sf_dir, out
@@ -1890,8 +1876,6 @@ def ivf_partitioned_split_timings(
                 .collect()
             )
             probes.append(time.perf_counter() - t0)
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
     return (
         round(statistics.median(builds), 3),
         round(statistics.median(probes), 3),

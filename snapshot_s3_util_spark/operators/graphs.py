@@ -19,24 +19,6 @@ from snapshot_s3_util_spark.registry import register
 _PR_ITERS = 3
 _PR_DAMP = 0.85
 
-# Edge-frame checkpoints are LAZY (r15, guide §2.4/§5 — the CC loop's
-# lazy-checkpoint pattern applied to the graph inputs): an eager
-# checkpoint runs a separate driver-blocking materialization job per
-# frame before any real work — `_strong_und_edges` stacked TWO of them
-# (dir + und) on every undirected-graph op; lazy folds each into the
-# first consuming action (the keyed-frontier count probe, a loop
-# round's count, or the final collect), saving 1-3 sequential job
-# barriers per op with identical plans and results. Interleaved A/B
-# (one session, arms alternated, results asserted identical, sf0.1):
-# pagerank lazy 6/7 pairs (med 1.849 -> 1.675 s), triangle 4/7
-# (1.585 -> 1.531), LPA 6/9 on the deciding re-run (min 1.677 ->
-# 1.606), bfs/kcore a wash inside host noise — no op measured a real
-# loss, and the barrier count drops at any scale. Cost: racing stages
-# of the materializing job can transiently compute a partition twice
-# ("Block already exists" warnings) — bounded by one stage's work,
-# and every frame here is deterministic, so duplicated compute is
-# consistent.
-_EDGE_CKPT_EAGER = False
 
 _EDGES_SQL = """
   SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
@@ -123,7 +105,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w").cast("double")
             / F.sum("w").over(Window.partitionBy("src"))
         ).alias("p"),
-    ).localCheckpoint(eager=_EDGE_CKPT_EAGER)
+    ).localCheckpoint(eager=False)
 
     nodes = nation.select(F.col("n_nationkey").alias("node"))
     n_nodes = nodes.count()
@@ -306,7 +288,7 @@ def _strong_dir_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("wr") <= _STRONG_TOPK)
         )
         .select("src", "dst")
-        .localCheckpoint(eager=_EDGE_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
 
 
@@ -321,7 +303,7 @@ def _strong_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
-        .localCheckpoint(eager=_EDGE_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
 
 
@@ -505,9 +487,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = cano.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         cano.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    sym = (sym.repartition("u") if keyed else sym).localCheckpoint(
-        eager=_EDGE_CKPT_EAGER
-    )
+    sym = (sym.repartition("u") if keyed else sym).localCheckpoint(eager=False)
     hops = spark.createDataFrame([(_BFS_SRC, 0)], "node int, hops int")
     for _ in range(_BFS_ROUNDS):
         if keyed:
@@ -613,7 +593,7 @@ def graph_bfs_hops_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
         cano.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .unionAll(cano.select(F.col("b").alias("u"), F.col("a").alias("v")))
         .repartition("u")
-        .localCheckpoint(eager=_EDGE_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
     hops = spark.createDataFrame([(_BFS_SRC, 0)], "node int, hops int")
     for _ in range(_BFS_ROUNDS):
@@ -866,9 +846,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
     if _use_keyed_frontier(und):
-        adj = adj.repartition("nbr").localCheckpoint(
-            eager=_EDGE_CKPT_EAGER
-        )
+        adj = adj.repartition("nbr").localCheckpoint(eager=False)
         labels = adj.select("node").distinct().withColumn(
             "label", F.col("node")
         )
@@ -963,7 +941,7 @@ def graph_label_propagation_keyed(
             und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
         )
         .repartition("nbr")
-        .localCheckpoint(eager=_EDGE_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
     labels = adj.select("node").distinct().withColumn("label", F.col("node"))
     for _ in range(_LPA_ROUNDS):
@@ -1157,7 +1135,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cost"
             ),
         )
-        .localCheckpoint(eager=_EDGE_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
     dist = (
         we.sparkSession.range(1)
@@ -1274,7 +1252,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").alias("dst"),
         )
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .localCheckpoint(eager=_EDGE_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
     nodes = (
         we.select(F.col("src").alias("node"))

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from snapshot_s3_util_spark.io import load_table
+from snapshot_s3_util_spark.io import load_table, staged
 from snapshot_s3_util_spark.params import ANTI_JOIN_CUTOFF
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import EVENTS_REL
@@ -1162,16 +1162,6 @@ _BJ_K = 2          # bloom hash functions (fp = fill^2 ~ 0.3% at sf0.1's fill)
 _BJ_M = 1 << 20    # bloom bits (sized for sf0.1's ~30k keys: ~11% fill)
 _BJ_PRIORITY = "1-URGENT"
 
-# Multi-consumer input checkpoints in this module are LAZY (r15,
-# guide §2.4/§5 — same decision as graphs._EDGE_CKPT_EAGER): the
-# bloom position set's consumers are the K broadcast builds
-# (AQE-deduplicated to one), whose build job materializes it; the
-# set-similarity prefix table's consumers are its two join legs. An
-# eager checkpoint only adds a blocking job before the first action.
-# A/B evidence in OPTIMIZATION_r15.md. (join_partition_pruned_dim's
-# checkpoint stays EAGER — it materializes the returned frame before
-# its staging tempdir is removed.)
-_INPUT_CKPT_EAGER = False
 
 # Kirsch-Mitzenmacher double hashing: ONE md5 per key, positions
 # pos_i = (h1 + i*h2) mod M from its two 32-bit halves — the same
@@ -1252,7 +1242,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("h2", F.expr("cast(conv(substring(dg, 9, 8), 16, 10) AS bigint)"))
         .withColumn("i", F.explode(F.array(*[F.lit(i) for i in range(_BJ_K)])))
         .select(((F.col("h1") + F.col("i") * F.col("h2")) % _BJ_M).alias("pos"))
-        .localCheckpoint(eager=_INPUT_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
     probe = (
         li.withColumn("dg", F.md5(F.col("l_orderkey").cast("string")))
@@ -1309,7 +1299,8 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     category="join",
 )
-def join_partition_pruned_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
+@staged
+def join_partition_pruned_dim(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     """Dynamic Partition Pruning end-to-end: a day-partitioned fact
     landing zone joined to an INDEPENDENT calendar dimension filtered
     on an attribute (weekend flag) the fact table cannot derive
@@ -1325,33 +1316,25 @@ def join_partition_pruned_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts.  DuckDB's dayofweek is 0-Sunday while Spark's is
     1-Sunday — the oracle uses (0, 6) to mean the same Sat/Sun.
     """
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="s3u_spark_dppdim_")
-    try:
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "day", F.to_date(F.date_trunc("day", "ts"))
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "day", F.to_date(F.date_trunc("day", "ts"))
+    )
+    ev.write.mode("overwrite").partitionBy("day").parquet(out)
+    landed = spark.read.parquet(out)
+    dim = spark.sql(
+        "SELECT explode(sequence(DATE'2024-01-01', DATE'2024-01-30'))"
+        " AS day"
+    ).withColumn("is_weekend", F.dayofweek("day").isin(1, 7))
+    weekend = dim.filter(F.col("is_weekend")).select("day")
+    return (
+        landed.join(F.broadcast(weekend), "day")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.countDistinct("day").cast("bigint").alias("n_days"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
-        ev.write.mode("overwrite").partitionBy("day").parquet(out)
-        landed = spark.read.parquet(out)
-        dim = spark.sql(
-            "SELECT explode(sequence(DATE'2024-01-01', DATE'2024-01-30'))"
-            " AS day"
-        ).withColumn("is_weekend", F.dayofweek("day").isin(1, 7))
-        weekend = dim.filter(F.col("is_weekend")).select("day")
-        return (
-            landed.join(F.broadcast(weekend), "day")
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.countDistinct("day").cast("bigint").alias("n_days"),
-                F.round(F.sum("value"), 4).alias("sum_value"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    )
 
 
 _SSJ_TAU = 0.6      # jaccard threshold
@@ -1441,7 +1424,7 @@ def join_set_similarity_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("prefix"),
         )
         .repartition(_derive_npart(ordered), "doc_id")
-        .localCheckpoint(eager=_INPUT_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
     # r15 (guide §2.3/§8 — decide with small rows, attach the payload
     # once): candidate generation and the distinct used to carry BOTH

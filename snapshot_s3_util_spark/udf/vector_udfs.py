@@ -298,12 +298,10 @@ def udf_pandas_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow framing, and the init-once path all have to produce
     position-independent results.
     """
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit SCALAR_ITER type: `from __future__ import annotations`
-    # stringifies hints, which defeats pandas_udf's hint inference
-    @pandas_udf("double", PandasUDFType.SCALAR_ITER)
-    def score(batches):
+    @pandas_udf("double")
+    def score(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
         # one-time per-task init (the whole point of SCALAR_ITER)
         lookup = np.arange(_ITER_SCALE_BINS) / 10.0
         for value, user_id in batches:

@@ -21,6 +21,7 @@ from snapshot_s3_util_spark.plans.inspect import (
     shuffle_count,
     uses_python,
 )
+from snapshot_s3_util_spark.plans.rank import _MID
 
 
 def test_keyrange_scan_pushes_range_predicate(spark, sf_dir):
@@ -1254,7 +1255,7 @@ def test_gini_rank_over_user_aggregate(spark, sf_dir):
         assert agg_pos != -1 and win_pos < agg_pos, plan
     else:  # fused regime: the rank rides the spine projection
         assert "Scan ExistingRDD" in plan, plan
-        assert "_grn_mid" in plan, plan
+        assert _MID in plan, plan
     assert not uses_python(df)
 
 
